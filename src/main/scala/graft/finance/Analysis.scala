@@ -194,13 +194,16 @@ object Analysis {
     regexp_replace(regexp_replace(c, "\\.", ""), ",", ".").cast("double")
 
   /** Q17 (panda_analysis.py:351-354): loan INTEREST extracted from free-text
-    * purpose ("... Tilgung 898,22 Zinsen 140,12") and summed.
+    * purpose ("... Tilgung 898,22 Zinsen 140,12") and summed. A purpose
+    * without a `Zinsen n,nn` amount contributes NULL, which the sum skips —
+    * pandas `str.extract` yields NaN there; a match that does not parse
+    * still fails the cast loudly.
     */
   def loanInterest(pc: DataFrame, yr: Int): DataFrame =
     pc.filter(year(col("book_date")) === yr && col("account") === "common" &&
         coalesce(col("purpose"), lit("")).contains("Darl.-Leistung"))
-      .select(euro(regexp_extract(col("purpose"),
-        "Zinsen\\s+([\\d.]+,\\d{2})", 1)).as("zinsen"))
+      .select(euro(nullif(regexp_extract(col("purpose"),
+        "Zinsen\\s+([\\d.]+,\\d{2})", 1), lit(""))).as("zinsen"))
       .agg(coalesce(sum("zinsen"), lit(0.0)).as("total"))
 
   /** Q18-Q20 (panda_analysis.py:386-450): home-office deduction table — AfA

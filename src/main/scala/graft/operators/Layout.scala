@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DateType
 
 /** Z-order (Morton) data layout — multi-dimensional clustering for scan
   * locality, the lakehouse OPTIMIZE-ZORDER primitive: rows sorted by an
@@ -52,8 +53,15 @@ object Layout {
   def zOrderKey(df: DataFrame, cols: Seq[String], bits: Int = 16)
       : DataFrame = {
     require(cols.nonEmpty && cols.distinct == cols, s"bad cols $cols")
-    val mmCols = cols.flatMap(c => Seq(min(col(c)).cast("long"),
-      max(col(c)).cast("long")))
+    // a DATE has no cast to BIGINT: it enters as its epoch day (the same
+    // order); every other type keeps the plain cast
+    val isDate = cols.filter(c => df.schema(c).dataType == DateType).toSet
+    def num(c: String): String =
+      if (isDate(c)) s"unix_date(`$c`)" else s"`$c`"
+    val mmCols = cols.flatMap { c =>
+      val k = if (isDate(c)) expr(num(c)) else col(c)
+      Seq(min(k).cast("long"), max(k).cast("long"))
+    }
     val mm = df.agg(mmCols.head, mmCols.tail: _*).head()
     require(!mm.isNullAt(0), "z-order over an empty or all-null frame")
     val span = (1L << bits) - 1
@@ -70,7 +78,7 @@ object Layout {
       // expr: Spark's Scala Column API has no integer DIV; the SQL
       // operator keeps the quotient exact where floor(a/b-as-double)
       // can land one off when the true quotient is integral
-      expr(s"((CAST(`$c` AS BIGINT) - ${lo}) * ${span}) DIV ${range}")
+      expr(s"((CAST(${num(c)} AS BIGINT) - ${lo}) * ${span}) DIV ${range}")
     }
     // one column: the Morton interleave is the identity — zkey is the
     // scaled column itself (plain range clustering, the degenerate

@@ -146,10 +146,10 @@ object Catalog {
   def tableManifest(root: String, table: String,
       version: Option[Int] = None): Option[SnapshotStore.Manifest] =
     snapshot(root, version).flatMap(_.tables.get(table)).map { rel =>
-      val p = Paths.get(tableRoot(root, table), rel)
-      require(Files.exists(p), s"catalog names a missing manifest: $p")
-      SnapshotStore.parse(
-        new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
+      val tr = tableRoot(root, table)
+      require(Files.exists(Paths.get(tr, rel)),
+        s"catalog names a missing manifest: ${Paths.get(tr, rel)}")
+      readStaged(tr, rel)
     }
 
   /** Catalog-pinned table read: resolve the catalog version ONCE, then
@@ -221,12 +221,7 @@ object Catalog {
     require(writes.nonEmpty, "empty catalog commit")
     // 1. the expensive, coordination-free part: data files + stats, once
     val staged = writes.map { case (t, (df0, mode)) =>
-      // whitelist, not blacklist: "." / ".." / "" / backslashes would
-      // make tableRoot escape or collide with the catalog's own dirs
-      require(t.matches("[A-Za-z0-9._-]+") && t != "." && t != ".." &&
-          !t.startsWith("_"),
-        s"bad table name: '$t' (need [A-Za-z0-9._-]+, not '.'/'..', " +
-          "no leading '_')")
+      checkName(t)
       val tr = tableRoot(root, t)
       // a mapped table's APPEND arrives in LOGICAL names; files must
       // carry the frozen PHYSICAL names (translation at staging is
@@ -241,153 +236,123 @@ object Catalog {
         }
         case Overwrite => df0
       }
-      val files = SnapshotStore.writeData(df, tr)
-      val stats = SnapshotStore.harvestStats(df.sparkSession, tr, files)
-      (t, mode, df.schema, files, stats)
+      (t, mode, df.schema, SnapshotStore.newFiles(df, tr))
     }.toSeq
-    // per-table bloom-maintenance memos: new-file bitmaps depend only on
-    // the staged files, so they survive rebase retries (the sidecar
-    // MERGE reruns per attempt against the current head's sidecar)
-    val bloomMemos = scala.collection.mutable.Map.empty[String,
-      scala.collection.mutable.Map[(String, Int, Int),
-        Seq[(String, Seq[Long])]]]
     // 2. the retry loop: tiny staged manifests against the current head
-    var attempt = 0
-    while (attempt < SnapshotStore.MaxRetries) {
+    SnapshotStore.retrying(s"catalog commit under $root") {
       val cur = snapshot(root)
-      val base = cur.map(_.version).getOrElse(-1)
-      val newTables = scala.collection.mutable.Map[String, String]() ++
-        cur.map(_.tables).getOrElse(Map.empty)
-      staged.foreach { case (t, mode, schema, files, stats) =>
-        val ddl = schema.toDDL
+      val tables = staged.foldLeft(cur.fold(Map.empty[String, String])(
+          _.tables)) { case (acc, (t, mode, schema, add)) =>
         val tr = tableRoot(root, t)
-        val baseM = cur.flatMap(_.tables.get(t)).map { rel =>
-          SnapshotStore.parse(new String(Files.readAllBytes(
-            Paths.get(tr, rel)), StandardCharsets.UTF_8))
-        }
+        val baseM = cur.flatMap(_.tables.get(t)).map(readStaged(tr, _))
         val m = mode match {
           case Overwrite =>
-            val statsFile = SnapshotStore.writeStatsFile(tr, stats)
-            SnapshotStore.Manifest(
-              baseM.map(_.version).getOrElse(-1) + 1,
-              baseM.map(_.version).getOrElse(-1), ddl, files,
-              statsFile = statsFile)
+            SnapshotStore.rewrite(baseM.fold(-1)(_.version), schema.toDDL,
+              add.files, add.sidecar)
           case Append =>
             baseM.foreach(m0 => require(
               SnapshotStore.appendCompatible(
                 SnapshotStore.appendPhysicalDdl(m0), schema),
               s"catalog append schema mismatch on $t: table has " +
                 s"[${SnapshotStore.appendPhysicalDdl(m0)}], " +
-                s"append has [$ddl]"))
-            baseM match {
-              case Some(m0) if m0.layers.nonEmpty =>
-                // a LAYERED table (predicate delete / merge-on-read in
-                // flight): the append lands as an ADD-ONLY layer ABOVE
-                // the chain — appended rows must never be suppressed by
-                // an older layer's delete keys or predicate, and the
-                // layers themselves must survive the commit (the bug
-                // the q135 gate caught: composing into base files
-                // silently DROPPED the layer chain). The layer CARRIES
-                // the already-harvested stats sidecar (and maintained
-                // bloom lines), so a CDC-heavy catalog table's appended
-                // rows stay prunable instead of decaying until OPTIMIZE.
-                val layerStats =
-                  if (files.isEmpty) ""
-                  else SnapshotStore.writeStatsFile(tr, stats)
-                m0.copy(version = m0.version + 1, base = m0.version,
-                  txn = "",
-                  layers = m0.layers :+
-                    SnapshotStore.MergeLayer("", files, layerStats),
-                  blooms = SnapshotStore.maintainBlooms(
-                    SparkSession.active, tr, m0.schemaDdl, files,
-                    bloomMemos.getOrElseUpdate(t,
-                      SnapshotStore.newBloomMemo()), m0.blooms))
-              case _ =>
-                // inline stats compose; base SEGMENTS and bloom indexes
-                // carry by reference (new files are simply unindexed);
-                // the manifest keeps the TABLE's schema (nullability
-                // may be wider than the batch's)
-                val allStats = baseM
-                  .map(m0 => SnapshotStore.fileStats(tr, m0))
-                  .getOrElse(Map.empty) ++ stats
-                val statsFile = SnapshotStore.writeStatsFile(tr, allStats)
-                SnapshotStore.Manifest(
-                  baseM.map(_.version).getOrElse(-1) + 1,
-                  baseM.map(_.version).getOrElse(-1),
-                  baseM.map(_.schemaDdl).getOrElse(ddl),
-                  baseM.map(_.files).getOrElse(Seq.empty) ++ files,
-                  statsFile = statsFile,
-                  segments = baseM.map(_.segments).getOrElse(Nil),
-                  blooms = SnapshotStore.maintainBlooms(
-                    SparkSession.active, tr,
-                    baseM.map(_.schemaDdl).getOrElse(ddl), files,
-                    bloomMemos.getOrElseUpdate(t,
-                      SnapshotStore.newBloomMemo()),
-                    baseM.map(_.blooms).getOrElse(Nil)),
-                  cluster = baseM.map(_.cluster).getOrElse(Nil),
-                  logical = baseM.map(_.logical).getOrElse(Nil),
-                  dropped = baseM.map(_.dropped).getOrElse(Nil))
-            }
+                s"append has [${schema.toDDL}]"))
+            // a LAYERED table takes the add-only-layer branch: composing
+            // into base files would silently DROP the layer chain (the
+            // bug the q135 gate caught)
+            SnapshotStore.appendTransform(add,
+              baseM.getOrElse(SnapshotStore.noTable(schema.toDDL)))
         }
-        val rel = s"_manifests/staged-${java.util.UUID.randomUUID()}.json"
-        val p = Paths.get(tr, rel)
-        Files.createDirectories(p.getParent)
-        Files.write(p,
-          SnapshotStore.render(m).getBytes(StandardCharsets.UTF_8))
-        newTables(t) = rel
+        acc + (t -> stage(tr, m))
       }
-      if (publishCat(root,
-          CatalogSnapshot(base + 1, newTables.toMap))) return base + 1
-      attempt += 1
+      val v = cur.fold(-1)(_.version) + 1
+      if (publishCat(root, CatalogSnapshot(v, tables))) Some(v) else None
     }
-    sys.error(s"catalog commit lost ${SnapshotStore.MaxRetries} " +
-      s"version races under $root")
   }
+
+  /** Table names are single path segments: a whitelist, not a
+    * blacklist — "." / ".." / "" / backslashes would make tableRoot
+    * escape or collide with the catalog's own dirs. */
+  private def checkName(t: String): Unit =
+    require(t.matches("[A-Za-z0-9._-]+") && t != "." && t != ".." &&
+        !t.startsWith("_"),
+      s"bad table name: '$t' (need [A-Za-z0-9._-]+, not '.'/'..', " +
+        "no leading '_')")
+
+  /** A staged manifest of the table at `tr`. */
+  private def readStaged(tr: String, rel: String): SnapshotStore.Manifest =
+    SnapshotStore.parse(new String(Files.readAllBytes(Paths.get(tr, rel)),
+      StandardCharsets.UTF_8))
+
+  /** Write `m` as a fresh staged manifest of the table at `tr` and return
+    * its table-relative path — invisible to every reader until a catalog
+    * version names it. */
+  private def stage(tr: String, m: SnapshotStore.Manifest): String = {
+    val rel = s"_manifests/staged-${java.util.UUID.randomUUID()}.json"
+    val p = Paths.get(tr, rel)
+    Files.createDirectories(p.getParent)
+    Files.write(p, SnapshotStore.render(m).getBytes(StandardCharsets.UTF_8))
+    rel
+  }
+
+  /** THE SINGLE-TABLE CATALOG COMMIT under [[SnapshotStore.retrying]]'s
+    * protocol: read `table`'s manifest at the catalog head (None when
+    * the head does not name it), derive the next manifest, stage it and
+    * publish the next catalog version naming it. `next` returning None
+    * commits nothing and answers the head version. With `expectedRel`
+    * the commit is a COMPARE-AND-SWAP: when the head names another
+    * manifest for the table, the caller's result was computed from a
+    * stale base and the commit answers None so the caller can recompute
+    * (the restart rule); concurrent commits to OTHER tables rebase. */
+  private def commitTable(root: String, table: String, what: String,
+      expectedRel: Option[String] = None)(
+      next: Option[SnapshotStore.Manifest] =>
+        Option[SnapshotStore.Manifest]): Option[Int] = {
+    val tr = tableRoot(root, table)
+    SnapshotStore.retrying(s"catalog $what under $root") {
+      val cur = snapshot(root)
+      val headRel = cur.flatMap(_.tables.get(table))
+      val head = cur.fold(-1)(_.version)
+      if (expectedRel.nonEmpty && headRel != expectedRel) {
+        if (headRel.isEmpty) sys.error(s"catalog under $root has no table $table")
+        Some(None) // stale base: recompute
+      } else next(headRel.map(readStaged(tr, _))) match {
+        case None => Some(Some(head))
+        case Some(m) =>
+          val tables = cur.fold(Map.empty[String, String])(_.tables)
+          if (publishCat(root, CatalogSnapshot(head + 1,
+              tables + (table -> stage(tr, m))))) Some(Some(head + 1))
+          else None
+      }
+    }
+  }
+
+  /** The manifest of a table the commit requires to exist. */
+  private def named(root: String, table: String)(
+      base: Option[SnapshotStore.Manifest]): SnapshotStore.Manifest =
+    base.getOrElse(sys.error(s"catalog under $root has no table $table"))
 
   /** CREATE-ONLY catalog commit — the race-free twin of
     * `commit(Overwrite)` for `CREATE TABLE`: the transaction FAILS
-    * (IllegalArgumentException) when the table name already exists at
+    * ([[TableExistsException]]) when the table name already exists at
     * the rebased head, so two concurrent CREATE TABLEs get one winner
     * and one loud loser instead of a silent overwrite (the same
     * one-winner arbiter [[SnapshotStore.commitCreate]] gives
     * SaveMode.ErrorIfExists — here the arbiter is the catalog publish:
     * a lost race re-checks existence against the NEW head before
-    * retrying). Data files are written before the loop like any commit;
-    * a loser's files are unreachable scratch for [[vacuum]]. Returns
-    * the committed catalog version. */
+    * retrying). Returns the committed catalog version. */
   def commitCreate(root: String, table: String, df: DataFrame): Int = {
-    require(table.matches("[A-Za-z0-9._-]+") && table != "." &&
-        table != ".." && !table.startsWith("_"),
-      s"bad table name: '$table' (need [A-Za-z0-9._-]+, not '.'/'..', " +
-        "no leading '_')")
+    checkName(table)
     def already = new TableExistsException(
       s"catalog under $root already has table $table " +
         "(create-only commit refuses to overwrite)")
     // fast-fail BEFORE paying the data write; the in-loop re-check is
     // what makes the commit race-free
     if (snapshot(root).exists(_.tables.contains(table))) throw already
-    val tr = tableRoot(root, table)
-    val files = SnapshotStore.writeData(df, tr)
-    val stats = SnapshotStore.harvestStats(df.sparkSession, tr, files)
-    var attempt = 0
-    while (attempt < SnapshotStore.MaxRetries) {
-      val cur = snapshot(root)
-      if (cur.exists(_.tables.contains(table))) throw already
-      val statsFile = SnapshotStore.writeStatsFile(tr, stats)
-      val m = SnapshotStore.Manifest(0, -1, df.schema.toDDL, files,
-        statsFile = statsFile)
-      val rel = s"_manifests/staged-${java.util.UUID.randomUUID()}.json"
-      val p = Paths.get(tr, rel)
-      Files.createDirectories(p.getParent)
-      Files.write(p,
-        SnapshotStore.render(m).getBytes(StandardCharsets.UTF_8))
-      val next = CatalogSnapshot(cur.map(_.version).getOrElse(-1) + 1,
-        cur.map(_.tables).getOrElse(Map.empty) + (table -> rel))
-      if (publishCat(root, next)) return next.version
-      attempt += 1
-    }
-    sys.error(s"catalog commitCreate lost ${SnapshotStore.MaxRetries} " +
-      s"version races under $root")
+    val add = SnapshotStore.newFiles(df, tableRoot(root, table))
+    commitTable(root, table, "commitCreate") { base =>
+      if (base.nonEmpty) throw already
+      Some(SnapshotStore.rewrite(-1, df.schema.toDDL, add.files, add.sidecar))
+    }.get
   }
 
   /** ADOPT an existing TABLE-LAYER table into the catalog: the next
@@ -403,22 +368,11 @@ object Catalog {
     val tr = tableRoot(root, table)
     val m = SnapshotStore.snapshot(tr).getOrElse(sys.error(
       s"adopt: no committed table-layer snapshot under $tr"))
-    var attempt = 0
-    while (attempt < SnapshotStore.MaxRetries) {
-      val cur = snapshot(root)
-      if (cur.exists(_.tables.contains(table)))
-        throw new TableExistsException(
-          s"catalog under $root already names $table")
-      val rel = s"_manifests/staged-${java.util.UUID.randomUUID()}.json"
-      Files.createDirectories(Paths.get(tr, rel).getParent)
-      Files.write(Paths.get(tr, rel),
-        SnapshotStore.render(m).getBytes(StandardCharsets.UTF_8))
-      val next = CatalogSnapshot(cur.map(_.version).getOrElse(-1) + 1,
-        cur.map(_.tables).getOrElse(Map.empty) + (table -> rel))
-      if (publishCat(root, next)) return next.version
-      attempt += 1
-    }
-    sys.error(s"catalog adopt lost ${SnapshotStore.MaxRetries} races")
+    commitTable(root, table, "adopt") { base =>
+      if (base.nonEmpty) throw new TableExistsException(
+        s"catalog under $root already names $table")
+      Some(m)
+    }.get
   }
 
   /** IDEMPOTENT append of ALREADY-WRITTEN data files — the driver half
@@ -429,13 +383,10 @@ object Catalog {
     * contract — if any RETAINED catalog version's manifest for this
     * table already carries `txn`, the commit is a no-op returning None
     * and the (re-written) staged files are deleted as this attempt's
-    * own scratch. Footer stats are harvested (one O(files) driver
-    * metadata pass), layered tables take the add-only-layer branch with
-    * layer-carried stats, and `maintain` blooms merge — identical
-    * manifest shapes to [[commit]]'s append. The txn-dedup scan walks
+    * own scratch. The manifest is [[SnapshotStore.appendTransform]]'s,
+    * identical to [[commit]]'s append. The txn-dedup scan walks
     * catalog versions newest-first, parsing each DISTINCT manifest of
-    * this table once; cost is bounded by the vacuum retention horizon,
-    * the same idempotency horizon the table layer documents. */
+    * this table once. */
   def commitStagedFilesOnce(root: String, table: String,
       files: Seq[String], schemaDdl: String, txn: String): Option[Int] = {
     require(txn.nonEmpty, "txn id must be non-empty")
@@ -444,31 +395,22 @@ object Catalog {
       val seenRels = scala.collection.mutable.Set[String]()
       versions(root).reverseIterator.exists { v =>
         snapshot(root, Some(v)).get.tables.get(table).exists { rel =>
-          seenRels.add(rel) && {
-            val p = Paths.get(tr, rel)
-            Files.exists(p) && SnapshotStore.parse(new String(
-              Files.readAllBytes(p), StandardCharsets.UTF_8)).txn == txn
-          }
+          seenRels.add(rel) && Files.exists(Paths.get(tr, rel)) &&
+            readStaged(tr, rel).txn == txn
         }
       }
     }
     def dropStaged(): Unit = files.foreach(f =>
       Files.deleteIfExists(Paths.get(tr, f)))
     if (txnSeen()) { dropStaged(); return None }
-    val spark = org.apache.spark.sql.SparkSession.active
+    val spark = SparkSession.active
     val schema = StructType.fromDDL(schemaDdl)
-    val stats = SnapshotStore.harvestStats(spark, tr, files)
-    lazy val layerStats =
-      if (files.isEmpty) "" else SnapshotStore.writeStatsFile(tr, stats)
-    val memo = SnapshotStore.newBloomMemo()
-    var attempt = 0
-    while (attempt < SnapshotStore.MaxRetries) {
-      val cur = snapshot(root).getOrElse(sys.error(
-        s"streaming append to a catalog with no versions: $root"))
-      val baseRel = cur.tables.getOrElse(table, sys.error(
-        s"catalog under $root has no table $table"))
-      val baseM = SnapshotStore.parse(new String(Files.readAllBytes(
-        Paths.get(tr, baseRel)), StandardCharsets.UTF_8))
+    val add = new SnapshotStore.NewFiles(spark, tr, files,
+      SnapshotStore.harvestStats(spark, tr, files))
+    var attempts = 0
+    var replayed = false
+    val v = commitTable(root, table, "commitStagedFilesOnce") { base =>
+      val baseM = named(root, table)(base)
       // staged files were executor-encoded with the LOGICAL schema; a
       // mapped table needs physical names (the builder-side guard in
       // GraftSqlTable refuses earlier — this backstops a mapping that
@@ -480,76 +422,28 @@ object Catalog {
       require(SnapshotStore.appendCompatible(baseM.schemaDdl, schema),
         s"streaming append schema mismatch on $table: table has " +
           s"[${baseM.schemaDdl}], batch has [$schemaDdl]")
+      attempts += 1
       // lost-race recheck: an interleaved commit may carry this txn
-      if (attempt > 0 && txnSeen()) { dropStaged(); return None }
-      val blooms = SnapshotStore.maintainBlooms(spark, tr,
-        baseM.schemaDdl, files, memo, baseM.blooms)
-      val next =
-        if (baseM.layers.nonEmpty)
-          baseM.copy(version = baseM.version + 1, base = baseM.version,
-            txn = txn,
-            layers = baseM.layers :+
-              SnapshotStore.MergeLayer("", files, layerStats),
-            blooms = blooms)
-        else {
-          val allStats = SnapshotStore.fileStats(tr, baseM) ++ stats
-          baseM.copy(version = baseM.version + 1, base = baseM.version,
-            txn = txn, files = baseM.files ++ files,
-            statsFile = SnapshotStore.writeStatsFile(tr, allStats),
-            blooms = blooms)
-        }
-      val rel = s"_manifests/staged-${java.util.UUID.randomUUID()}.json"
-      Files.createDirectories(Paths.get(tr, rel).getParent)
-      Files.write(Paths.get(tr, rel),
-        SnapshotStore.render(next).getBytes(StandardCharsets.UTF_8))
-      if (publishCat(root, CatalogSnapshot(cur.version + 1,
-          cur.tables + (table -> rel)))) return Some(cur.version + 1)
-      attempt += 1
+      if (attempts > 1 && txnSeen()) { replayed = true; None }
+      else Some(SnapshotStore.appendTransform(add, baseM).copy(txn = txn))
     }
-    sys.error(s"catalog commitStagedFilesOnce lost " +
-      s"${SnapshotStore.MaxRetries} version races under $root")
+    if (replayed) { dropStaged(); None } else v
   }
 
   /** COMPARE-AND-SWAP overwrite — the read-modify-write commit under
     * SQL MERGE INTO / UPDATE (copy-on-write lane): replace `table`'s
     * content with `df` as one catalog transaction IFF the table's
     * manifest at the catalog head is still `expectedRel` (the manifest
-    * the caller computed `df` FROM). A concurrent commit to the SAME
-    * table means the computed result is stale — publishing it would
-    * silently drop the interleaved change, so the CAS fails with None
-    * and the caller recomputes from the new head ([[SnapshotStore
-    * .optimize]]'s restart rule lifted to the catalog). Concurrent
-    * commits to OTHER tables rebase fine (the retry loop re-links
-    * against the new catalog head as long as `table`'s rel is
-    * unchanged). Data files are written once; a conflicting attempt's
-    * files are unreachable scratch for [[vacuum]]. */
+    * the caller computed `df` FROM); otherwise None and the caller
+    * recomputes from the new head ([[commitTable]]). Data files are
+    * written once. */
   def replaceTableIf(root: String, table: String, expectedRel: String,
       df: DataFrame): Option[Int] = {
-    val tr = tableRoot(root, table)
-    val files = SnapshotStore.writeData(df, tr)
-    val stats = SnapshotStore.harvestStats(df.sparkSession, tr, files)
-    var attempt = 0
-    while (attempt < SnapshotStore.MaxRetries) {
-      val cur = snapshot(root).getOrElse(sys.error(
-        s"replaceTableIf on a catalog with no committed versions: $root"))
-      val baseRel = cur.tables.getOrElse(table, sys.error(
-        s"catalog under $root has no table $table"))
-      if (baseRel != expectedRel) return None // stale base: recompute
-      val baseM = SnapshotStore.parse(new String(Files.readAllBytes(
-        Paths.get(tr, baseRel)), StandardCharsets.UTF_8))
-      val statsFile = SnapshotStore.writeStatsFile(tr, stats)
-      val next = SnapshotStore.Manifest(baseM.version + 1, baseM.version,
-        df.schema.toDDL, files, statsFile = statsFile)
-      val rel = s"_manifests/staged-${java.util.UUID.randomUUID()}.json"
-      Files.createDirectories(Paths.get(tr, rel).getParent)
-      Files.write(Paths.get(tr, rel),
-        SnapshotStore.render(next).getBytes(StandardCharsets.UTF_8))
-      if (publishCat(root, CatalogSnapshot(cur.version + 1,
-          cur.tables + (table -> rel)))) return Some(cur.version + 1)
-      attempt += 1
+    val add = SnapshotStore.newFiles(df, tableRoot(root, table))
+    commitTable(root, table, "replaceTableIf", Some(expectedRel)) { base =>
+      Some(SnapshotStore.rewrite(named(root, table)(base).version,
+        df.schema.toDDL, add.files, add.sidecar))
     }
-    sys.error(s"catalog replaceTableIf lost ${SnapshotStore.MaxRetries} " +
-      s"version races under $root")
   }
 
   /** RESTORE one table to its content at catalog version
@@ -570,37 +464,20 @@ object Catalog {
     val target = snapshot(root, Some(toCatalogVersion)).getOrElse(
       sys.error(s"restore: catalog under $root has no version " +
         s"$toCatalogVersion"))
-    val targetRel = target.tables.getOrElse(table, sys.error(
+    val targetM = readStaged(tr, target.tables.getOrElse(table, sys.error(
       s"restore: table $table does not exist at catalog version " +
-        s"$toCatalogVersion"))
-    val targetM = SnapshotStore.parse(new String(Files.readAllBytes(
-      Paths.get(tr, targetRel)), StandardCharsets.UTF_8))
-    var attempt = 0
-    while (attempt < SnapshotStore.MaxRetries) {
-      val cur = snapshot(root).getOrElse(sys.error(
-        s"restore on a catalog with no committed versions: $root"))
-      val headRel = cur.tables.getOrElse(table, sys.error(
-        s"restore: catalog under $root no longer names $table"))
-      val headM = SnapshotStore.parse(new String(Files.readAllBytes(
-        Paths.get(tr, headRel)), StandardCharsets.UTF_8))
-      // no-op when the head already HAS the target's content (compare
-      // everything but the commit bookkeeping — a restore of a restore
-      // must not stack versions)
-      def content(m: SnapshotStore.Manifest) =
-        m.copy(version = 0, base = 0, txn = "", ts = 0L)
-      if (content(headM) == content(targetM)) return cur.version
-      val next = targetM.copy(version = headM.version + 1,
-        base = headM.version, txn = "")
-      val rel = s"_manifests/staged-${java.util.UUID.randomUUID()}.json"
-      Files.createDirectories(Paths.get(tr, rel).getParent)
-      Files.write(Paths.get(tr, rel),
-        SnapshotStore.render(next).getBytes(StandardCharsets.UTF_8))
-      if (publishCat(root, CatalogSnapshot(cur.version + 1,
-          cur.tables + (table -> rel)))) return cur.version + 1
-      attempt += 1
-    }
-    sys.error(s"catalog restore lost ${SnapshotStore.MaxRetries} " +
-      s"version races under $root")
+        s"$toCatalogVersion")))
+    // no-op when the head already HAS the target's content (compare
+    // everything but the commit bookkeeping — a restore of a restore
+    // must not stack versions)
+    def content(m: SnapshotStore.Manifest) =
+      m.copy(version = 0, base = 0, txn = "", ts = 0L)
+    commitTable(root, table, "restore") { base =>
+      val headM = named(root, table)(base)
+      if (content(headM) == content(targetM)) None
+      else Some(targetM.copy(version = headM.version + 1,
+        base = headM.version, txn = ""))
+    }.get
   }
 
   /** UPDATE as the LAYER PAIR in ONE catalog transaction — the
@@ -622,37 +499,18 @@ object Catalog {
     // the caller computed pred/updated against the LOGICAL view of
     // expectedRel's manifest; layer files and the stats walk are
     // physical — translate both against that same manifest (race-safe:
-    // any concurrent commit fails the CAS below anyway)
-    val expM = SnapshotStore.parse(new String(Files.readAllBytes(
-      Paths.get(tr, expectedRel)), StandardCharsets.UTF_8))
+    // any concurrent commit fails the CAS anyway)
+    val expM = readStaged(tr, expectedRel)
     val pred = SnapshotStore.predToPhysical(pred0, expM)
-    val updated = SnapshotStore.toPhysical(updated0, expM)
-    val files = SnapshotStore.writeData(updated, tr)
-    val stats = SnapshotStore.harvestStats(updated.sparkSession, tr, files)
-    val layerStats =
-      if (files.isEmpty) "" else SnapshotStore.writeStatsFile(tr, stats)
-    var attempt = 0
-    while (attempt < SnapshotStore.MaxRetries) {
-      val cur = snapshot(root).getOrElse(sys.error(
-        s"updateWhereIf on a catalog with no committed versions: $root"))
-      val baseRel = cur.tables.getOrElse(table, sys.error(
-        s"catalog under $root has no table $table"))
-      if (baseRel != expectedRel) return None // stale base: recompute
-      val baseM = SnapshotStore.parse(new String(Files.readAllBytes(
-        Paths.get(tr, baseRel)), StandardCharsets.UTF_8))
-      val next0 = SnapshotStore.deleteTransform(tr, baseM, pred)
-      val next = next0.copy(layers = next0.layers :+
-        SnapshotStore.MergeLayer("", files, layerStats))
-      val rel = s"_manifests/staged-${java.util.UUID.randomUUID()}.json"
-      Files.createDirectories(Paths.get(tr, rel).getParent)
-      Files.write(Paths.get(tr, rel),
-        SnapshotStore.render(next).getBytes(StandardCharsets.UTF_8))
-      if (publishCat(root, CatalogSnapshot(cur.version + 1,
-          cur.tables + (table -> rel)))) return Some(cur.version + 1)
-      attempt += 1
+    val add = SnapshotStore.newFiles(
+      SnapshotStore.toPhysical(updated0, expM), tr)
+    val layerStats = if (add.files.isEmpty) "" else add.sidecar
+    commitTable(root, table, "updateWhereIf", Some(expectedRel)) { base =>
+      val next = SnapshotStore.deleteTransform(tr, named(root, table)(base),
+        pred)
+      Some(next.copy(layers = next.layers :+
+        SnapshotStore.MergeLayer("", add.files, layerStats)))
     }
-    sys.error(s"catalog updateWhereIf lost ${SnapshotStore.MaxRetries} " +
-      s"version races under $root")
   }
 
   /** Predicate-level DELETE on a catalog table — the catalog-published
@@ -662,30 +520,13 @@ object Catalog {
     * manifest. Pure metadata; pinned catalog readers are untouched.
     * Returns the committed catalog version. */
   def deleteWhere(root: String, table: String,
-      pred0: SnapshotStore.StatsPred): Int = {
-    val tr = tableRoot(root, table)
-    var attempt = 0
-    while (attempt < SnapshotStore.MaxRetries) {
-      val cur = snapshot(root).getOrElse(sys.error(
-        s"deleteWhere on a catalog with no committed versions: $root"))
-      val baseRel = cur.tables.getOrElse(table,
-        sys.error(s"catalog under $root has no table $table"))
-      val baseM = SnapshotStore.parse(new String(Files.readAllBytes(
-        Paths.get(tr, baseRel)), StandardCharsets.UTF_8))
+      pred0: SnapshotStore.StatsPred): Int =
+    commitTable(root, table, "deleteWhere") { base =>
+      val baseM = named(root, table)(base)
       // LOGICAL predicate → physical (stats walk + stored layer pred)
-      val pred = SnapshotStore.predToPhysical(pred0, baseM)
-      val next = SnapshotStore.deleteTransform(tr, baseM, pred)
-      val rel = s"_manifests/staged-${java.util.UUID.randomUUID()}.json"
-      Files.createDirectories(Paths.get(tr, rel).getParent)
-      Files.write(Paths.get(tr, rel),
-        SnapshotStore.render(next).getBytes(StandardCharsets.UTF_8))
-      if (publishCat(root, CatalogSnapshot(cur.version + 1,
-          cur.tables + (table -> rel)))) return cur.version + 1
-      attempt += 1
-    }
-    sys.error(s"catalog deleteWhere lost ${SnapshotStore.MaxRetries} " +
-      s"version races under $root")
-  }
+      Some(SnapshotStore.deleteTransform(tableRoot(root, table), baseM,
+        SnapshotStore.predToPhysical(pred0, baseM)))
+    }.get
 
   /** DATA-LESS SCHEMA EVOLUTION on a catalog table — `ALTER TABLE ...
     * ADD COLUMNS`: the next catalog version names a staged manifest
@@ -699,15 +540,8 @@ object Catalog {
     require(added.nonEmpty, "evolveSchema: no columns to add")
     require(added.forall(_.nullable),
       "added columns must be NULLABLE — existing files backfill NULL")
-    val tr = tableRoot(root, table)
-    var attempt = 0
-    while (attempt < SnapshotStore.MaxRetries) {
-      val cur = snapshot(root).getOrElse(sys.error(
-        s"evolveSchema on a catalog with no committed versions: $root"))
-      val baseRel = cur.tables.getOrElse(table,
-        sys.error(s"catalog under $root has no table $table"))
-      val baseM = SnapshotStore.parse(new String(Files.readAllBytes(
-        Paths.get(tr, baseRel)), StandardCharsets.UTF_8))
+    commitTable(root, table, "evolveSchema") { base =>
+      val baseM = named(root, table)(base)
       val schema = StructType.fromDDL(baseM.schemaDdl)
       // "taken" covers the PHYSICAL names (including dropped columns,
       // whose bytes persist in old files and would leak back under a
@@ -719,19 +553,9 @@ object Catalog {
         s"evolveSchema: column name(s) already in use on $table " +
           s"(current or dropped — OPTIMIZE to free dropped names): " +
           dup.mkString(", "))
-      val widened = StructType(schema.fields.toSeq ++ added)
-      val next = baseM.copy(version = baseM.version + 1,
-        base = baseM.version, schemaDdl = widened.toDDL, txn = "")
-      val rel = s"_manifests/staged-${java.util.UUID.randomUUID()}.json"
-      Files.createDirectories(Paths.get(tr, rel).getParent)
-      Files.write(Paths.get(tr, rel),
-        SnapshotStore.render(next).getBytes(StandardCharsets.UTF_8))
-      if (publishCat(root, CatalogSnapshot(cur.version + 1,
-          cur.tables + (table -> rel)))) return cur.version + 1
-      attempt += 1
-    }
-    sys.error(s"catalog evolveSchema lost ${SnapshotStore.MaxRetries} " +
-      s"version races under $root")
+      Some(SnapshotStore.bump(baseM).copy(
+        schemaDdl = StructType(schema.fields.toSeq ++ added).toDDL))
+    }.get
   }
 
   /** `ALTER TABLE ... RENAME COLUMN` — PURE METADATA at any table size
@@ -783,32 +607,13 @@ object Catalog {
         dropped = baseM.dropped :+ phys)
     }
 
-  /** Shared CAS loop for the metadata-only column-mapping commits. */
+  /** The metadata-only column-mapping commits. */
   private def alterMapping(root: String, table: String, op: String)
       (transform: SnapshotStore.Manifest => SnapshotStore.Manifest)
-      : Int = {
-    val tr = tableRoot(root, table)
-    var attempt = 0
-    while (attempt < SnapshotStore.MaxRetries) {
-      val cur = snapshot(root).getOrElse(sys.error(
-        s"$op on a catalog with no committed versions: $root"))
-      val baseRel = cur.tables.getOrElse(table,
-        sys.error(s"catalog under $root has no table $table"))
-      val baseM = SnapshotStore.parse(new String(Files.readAllBytes(
-        Paths.get(tr, baseRel)), StandardCharsets.UTF_8))
-      val next = transform(baseM).copy(version = baseM.version + 1,
-        base = baseM.version, txn = "")
-      val rel = s"_manifests/staged-${java.util.UUID.randomUUID()}.json"
-      Files.createDirectories(Paths.get(tr, rel).getParent)
-      Files.write(Paths.get(tr, rel),
-        SnapshotStore.render(next).getBytes(StandardCharsets.UTF_8))
-      if (publishCat(root, CatalogSnapshot(cur.version + 1,
-          cur.tables + (table -> rel)))) return cur.version + 1
-      attempt += 1
-    }
-    sys.error(s"catalog $op lost ${SnapshotStore.MaxRetries} " +
-      s"version races under $root")
-  }
+      : Int =
+    commitTable(root, table, op) { base =>
+      Some(SnapshotStore.bump(transform(named(root, table)(base))))
+    }.get
 
   /** DROP a table from the catalog: the next catalog version simply no
     * longer names it — data and staged manifests stay on disk until
@@ -818,18 +623,15 @@ object Catalog {
     * version). Returns false when the catalog does not know the table
     * (the [[org.apache.spark.sql.connector.catalog.TableCatalog]]
     * dropTable contract). */
-  def drop(root: String, table: String): Boolean = {
-    var attempt = 0
-    while (attempt < SnapshotStore.MaxRetries) {
-      val cur = snapshot(root).getOrElse(return false)
-      if (!cur.tables.contains(table)) return false
-      if (publishCat(root, CatalogSnapshot(cur.version + 1,
-          cur.tables - table))) return true
-      attempt += 1
+  def drop(root: String, table: String): Boolean =
+    SnapshotStore.retrying(s"catalog drop under $root") {
+      snapshot(root) match {
+        case Some(cur) if cur.tables.contains(table) =>
+          if (publishCat(root, CatalogSnapshot(cur.version + 1,
+              cur.tables - table))) Some(true) else None
+        case _ => Some(false)
+      }
     }
-    sys.error(s"catalog drop lost ${SnapshotStore.MaxRetries} " +
-      s"version races under $root")
-  }
 
   /** Catalog-level GC — the reachability walk the table layer's
     * [[SnapshotStore.vacuum]] explicitly refuses to run on a
@@ -916,19 +718,10 @@ object Catalog {
     deleted
   }
 
-  private def publishCat(root: String, s: CatalogSnapshot): Boolean = {
-    val dir = catDir(root)
-    Files.createDirectories(dir)
-    val tmp = dir.resolve(s".tmp-${java.util.UUID.randomUUID()}")
-    // publish IS the commit instant — stamp unconditionally (see the
-    // table layer's publish); TIMESTAMP AS OF resolves against this
-    Files.write(tmp, render(s.copy(ts = System.currentTimeMillis()))
-      .getBytes(StandardCharsets.UTF_8))
-    try {
-      Files.createLink(catPath(root, s.version), tmp)
-      true
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException => false
-    } finally Files.deleteIfExists(tmp)
-  }
+  /** Publish catalog version `s.version` (one winner per version, the
+    * table layer's primitive); publish IS the commit instant, so the
+    * wall-clock TIMESTAMP AS OF resolves against is stamped here. */
+  private def publishCat(root: String, s: CatalogSnapshot): Boolean =
+    SnapshotStore.linkNew(catPath(root, s.version),
+      render(s.copy(ts = System.currentTimeMillis())))
 }

@@ -203,9 +203,10 @@ final case class GraftMergeIntoCommand(catRoot: String, table: String,
     bySource: Seq[MergeAction]) extends LeafRunnableCommand {
   import GraftDml._
 
-  override def run(spark: SparkSession): Seq[Row] = {
-    var attempt = 0
-    while (attempt < SnapshotStore.MaxRetries) {
+  // a concurrent commit to the table fails the CAS: recompute from the
+  // new head (the restart rule of SnapshotStore.retrying)
+  override def run(spark: SparkSession): Seq[Row] =
+    SnapshotStore.retrying(s"graft MERGE on $catRoot/$table") {
       val (t, rel, schema) =
         currentTarget(spark, catRoot, table, targetOutput)
       require(!schema.fieldNames.exists(_.startsWith("__graft_merge")),
@@ -242,14 +243,9 @@ final case class GraftMergeIntoCommand(catRoot: String, table: String,
         actionBranches(sOnly, notMatched, targetOutput, schema,
           defaultKeep = false, targetVal)
       val merged = foldBranches(j, branches, schema).to(schema)
-      Catalog.replaceTableIf(catRoot, table, rel, merged) match {
-        case Some(_) => return Seq.empty
-        case None    => attempt += 1 // concurrent commit: recompute
-      }
+      Catalog.replaceTableIf(catRoot, table, rel, merged)
+        .map(_ => Seq.empty[Row])
     }
-    sys.error(s"graft MERGE lost ${SnapshotStore.MaxRetries} CAS races " +
-      s"on $catRoot/$table")
-  }
 }
 
 /** SQL `UPDATE graft.main.t SET ... [WHERE p]`. Two commit lanes, both
@@ -275,8 +271,8 @@ final case class GraftUpdateCommand(catRoot: String, table: String,
   override def run(spark: SparkSession): Seq[Row] = {
     val pred: Option[StatsPred] =
       cond.flatMap(GraftSqlTable.condToStatsPred)
-    var attempt = 0
-    while (attempt < SnapshotStore.MaxRetries) {
+    // a concurrent commit to the table fails the CAS: recompute
+    SnapshotStore.retrying(s"graft UPDATE on $catRoot/$table") {
       val (t, rel, schema) =
         currentTarget(spark, catRoot, table, targetOutput)
       val setMap = assignmentMap(assignments, targetOutput)
@@ -303,12 +299,7 @@ final case class GraftUpdateCommand(catRoot: String, table: String,
           Catalog.replaceTableIf(catRoot, table, rel,
             rewritten.to(schema))
       }
-      committed match {
-        case Some(_) => return Seq.empty
-        case None    => attempt += 1 // concurrent commit: recompute
-      }
+      committed.map(_ => Seq.empty[Row])
     }
-    sys.error(s"graft UPDATE lost ${SnapshotStore.MaxRetries} CAS races " +
-      s"on $catRoot/$table")
   }
 }

@@ -102,8 +102,8 @@ private[sources] object GraftProcedures {
         else input.getUTF8String(2).toString.split(",").toSeq
           .map(_.trim).filter(_.nonEmpty)
       val spark = SparkSession.active
-      var attempt = 0
-      while (attempt < SnapshotStore.MaxRetries) {
+      // a concurrent commit to the table fails the CAS: refold
+      SnapshotStore.retrying(s"optimize on $root/$table") {
         val snap = Catalog.snapshot(root).getOrElse(sys.error(
           s"optimize on a catalog with no committed versions: $root"))
         val rel = snap.tables.getOrElse(table, sys.error(
@@ -119,17 +119,13 @@ private[sources] object GraftProcedures {
             graft.operators.Layout.zOrder(df, zorderBy,
               partitions = targetFiles).drop("zkey")
           else df.repartition(targetFiles)
-        Catalog.replaceTableIf(root, table, rel, rewritten) match {
-          case Some(v) =>
-            val after = Catalog.tableManifest(root, table, Some(v))
-              .get.files.size
-            return result(outSchema, new GenericInternalRow(
-              Array[Any](v, before, after)))
-          case None => attempt += 1 // concurrent commit: refold
+        Catalog.replaceTableIf(root, table, rel, rewritten).map { v =>
+          val after = Catalog.tableManifest(root, table, Some(v))
+            .get.files.size
+          result(outSchema, new GenericInternalRow(
+            Array[Any](v, before, after)))
         }
       }
-      sys.error(s"optimize lost ${SnapshotStore.MaxRetries} CAS races " +
-        s"on $root/$table")
     }
   }
 

@@ -1469,7 +1469,7 @@ object SnapshotStore {
     *
     * Later appends leave new files unindexed (conservatively opened) —
     * UNLESS the index opted into commit-time maintenance
-    * (`maintain = true`): then every [[commitAppend]] also harvests
+    * (`maintain = true`): then every append ([[appendTransform]]) harvests
     * bitmaps for its new files (O(new data), one scan per maintained
     * column) and publishes a merged sidecar, so point-probe pruning
     * never decays on an append-heavy table. OPTIMIZE/merge rewrite
@@ -1540,20 +1540,14 @@ object SnapshotStore {
       Files.write(p, sb.toString.getBytes(StandardCharsets.UTF_8))
     }
     val idx = BloomIndex(column, effLogBits, k, rel, maintain)
-    var attempt = 0
-    while (attempt < MaxRetries) {
-      val cur = snapshot(root).get
+    commitHead(root, "indexBloom") { cur =>
       require(cur.schemaDdl == cur0.schemaDdl,
         s"schema evolved during indexBloom: index was built for " +
           s"[${cur0.schemaDdl}], table now has [${cur.schemaDdl}]")
       // one live index per column: re-indexing replaces the old ref
-      if (publish(root, cur.copy(version = cur.version + 1,
-          base = cur.version, txn = "",
-          blooms = cur.blooms.filterNot(_.column == column) :+ idx)))
-        return cur.version + 1
-      attempt += 1
+      Some(bump(cur).copy(
+        blooms = cur.blooms.filterNot(_.column == column) :+ idx))
     }
-    sys.error(s"indexBloom lost $MaxRetries version races under $root")
   }
 
   /** One scan of (`files`, `column`) → per-file bloom bitmap words
@@ -1637,8 +1631,8 @@ object SnapshotStore {
     scala.collection.mutable.Map.empty
 
   /** Commit-time BLOOM MAINTENANCE (opt-in per index via
-    * `indexBloom(maintain = true)`), shared by [[commitAppend]],
-    * [[commitAppendOnce]] and [[Catalog.commit]]'s append branches:
+    * `indexBloom(maintain = true)`), run by [[appendTransform]] for
+    * every append path of both layers:
     * bitmaps for the NEW files on each maintained column, memoized
     * across rebase retries on the index parameters (the new files'
     * bitmaps do not depend on the base — only the sidecar merge does,
@@ -1774,49 +1768,213 @@ object SnapshotStore {
       }
     }
 
-  /** Atomically publish `m` as version `m.version`. True if this writer
-    * won the version; false if another commit got there first. */
-  private def publish(root: String, m: Manifest): Boolean = {
-    val dir = manifestDir(root)
+  // ------------------------------------------------------ commit protocol
+
+  /** Create `target` holding `content` IFF it does not exist yet — the
+    * one-winner primitive under both the table layer's [[publish]] and
+    * the catalog's. The content goes to a `.tmp-` sibling first (never a
+    * committed name, so a crash leaves only scratch), then is hard-linked
+    * into place. True if this writer won `target`. */
+  private[sources] def linkNew(target: Path, content: String): Boolean = {
+    val dir = target.getParent
     Files.createDirectories(dir)
     val tmp = dir.resolve(s".tmp-${java.util.UUID.randomUUID()}")
-    // commit wall-clock is stamped HERE, unconditionally: publish IS the
-    // commit instant, and manifests built by copy() would otherwise
-    // carry their base's clock. Immutable manifests make it exact
-    // forever — the TIMESTAMP AS OF resolution base.
-    Files.write(tmp, render(m.copy(ts = System.currentTimeMillis()))
-      .getBytes(StandardCharsets.UTF_8))
+    Files.write(tmp, content.getBytes(StandardCharsets.UTF_8))
     try {
       // hard-link creation is atomic and fails iff the target exists —
       // exactly the one-winner-per-version primitive the protocol needs
-      Files.createLink(manifestPath(root, m.version), tmp)
+      Files.createLink(target, tmp)
       true
     } catch {
       case _: java.nio.file.FileAlreadyExistsException => false
     } finally Files.deleteIfExists(tmp)
   }
 
+  /** Atomically publish `m` as version `m.version`. True if this writer
+    * won the version; false if another commit got there first. The
+    * commit wall-clock is stamped HERE, unconditionally: publish IS the
+    * commit instant, and manifests built by copy() would otherwise carry
+    * their base's clock. Immutable manifests make it exact forever — the
+    * TIMESTAMP AS OF resolution base. */
+  private def publish(root: String, m: Manifest): Boolean =
+    linkNew(manifestPath(root, m.version),
+      render(m.copy(ts = System.currentTimeMillis())))
+
   private[sources] val MaxRetries = 64
 
-  /** OVERWRITE commit: the new snapshot references only `df`'s files.
-    * Returns the committed version. Retries past concurrent winners —
-    * an overwrite rebases trivially (its content does not depend on the
-    * base), so it always eventually lands. */
-  def commitOverwrite(df: DataFrame, root: String): Int = {
-    val files = writeData(df, root)
-    val ddl = df.schema.toDDL
-    val stats = harvestStats(df.sparkSession, root, files)
-    // an overwrite's stats do not depend on the base — written once
-    val statsFile = writeStatsFile(root, stats)
+  /** THE COMMIT PROTOCOL. Every commit of the table layer, the catalog
+    * and the SQL commands is one call of this loop: `step` reads the
+    * current head, derives the next state from it and tries to publish;
+    * `Some` ends the loop with the result, `None` means another writer
+    * won the version race, and the next attempt starts from the new
+    * head. After [[MaxRetries]] lost races the commit fails loudly.
+    *
+    *   - REBASE vs RESTART. Work that does not depend on the base is done
+    *     once, before the loop: data files, their stats sidecar, the
+    *     new files' bloom bitmaps ([[NewFiles]]), a merge-on-read layer's
+    *     winners. An attempt then only re-derives the tiny manifest
+    *     against the new head — appends, merge-on-read layers, deletes
+    *     and metadata commits REBASE, so concurrent writers all land in
+    *     version order. Read-modify-write commits (optimize, compaction,
+    *     CoW merge, the SQL MERGE/UPDATE CAS) depend on the base's
+    *     content: they RESTART — recompute from the new head — because
+    *     publishing a rewrite of a stale base would silently drop the
+    *     interleaved commit.
+    *   - TXN HORIZON. The idempotent commits ([[commitAppendOnce]],
+    *     [[mergeOnReadOnce]], [[Catalog.commitStagedFilesOnce]]) dedup a
+    *     writer transaction id against every RETAINED version, newest
+    *     first, before writing anything, and re-check the versions that
+    *     landed since after each lost race. Replays older than the
+    *     [[vacuum]] retention are not deduped (Delta's txn contract), and
+    *     the guard is against replays, not two live writers sharing one
+    *     id (the publish is keyed by version, not by txn).
+    *   - ORPHAN SCRATCH. A lost or abandoned attempt leaves what it wrote
+    *     (data files, sidecars, segment and staged manifests) unreferenced
+    *     by any version; [[vacuum]] / [[Catalog.vacuum]] sweep it. Nothing
+    *     a loser wrote is ever reachable. */
+  private[sources] def retrying[A](what: String)(step: => Option[A]): A = {
     var attempt = 0
     while (attempt < MaxRetries) {
-      val base = versions(root).lastOption.getOrElse(-1)
-      val v = base + 1
-      if (publish(root, Manifest(v, base, ddl, files,
-          statsFile = statsFile))) return v
+      val r = step
+      if (r.isDefined) return r.get
       attempt += 1
     }
-    sys.error(s"commitOverwrite lost $MaxRetries version races under $root")
+    sys.error(s"$what lost $MaxRetries version races")
+  }
+
+  /** The next version of `m` with its writer txn cleared: a txn marks
+    * exactly ONE commit's replay identity — carrying it into a later
+    * version would make a replayed batch think it already landed there.
+    * Every other field carries forward. */
+  private[sources] def bump(m: Manifest): Manifest =
+    m.copy(version = m.version + 1, base = m.version, txn = "")
+
+  /** A REWRITE's manifest — create, overwrite, CoW merge, optimize: the
+    * new files replace everything, so nothing of `prev`'s manifest
+    * carries forward but its place in the chain. */
+  private[sources] def rewrite(prev: Int, ddl: String, files: Seq[String],
+      statsFile: String, cluster: Seq[String] = Nil): Manifest =
+    Manifest(prev + 1, prev, ddl, files, statsFile = statsFile,
+      cluster = cluster)
+
+  /** One commit's new data files, with what every attempt reuses: their
+    * own stats sidecar (an add-only layer's or a rewrite's — it depends
+    * only on the new files, so it is written once, lazily) and their
+    * bloom bitmaps (memoized across rebase retries by index parameters;
+    * only the sidecar MERGE depends on the base). */
+  private[sources] final class NewFiles(val spark: SparkSession,
+      val root: String, val files: Seq[String],
+      val stats: Map[String, Map[String, ColStats]]) {
+    lazy val sidecar: String = writeStatsFile(root, stats)
+    val bloomMemo = newBloomMemo()
+  }
+
+  /** Write `df` as new data files under `root` and harvest their stats. */
+  private[sources] def newFiles(df: DataFrame, root: String): NewFiles = {
+    val files = writeData(df, root)
+    new NewFiles(df.sparkSession, root, files,
+      harvestStats(df.sparkSession, root, files))
+  }
+
+  /** THE APPEND DERIVATION, shared by every append path of both layers:
+    * the next manifest after adding `add`'s files to `cur`. On a LAYERED
+    * table (merge-on-read in flight) the files land as an ADD-ONLY layer
+    * ABOVE the chain — appended rows must never be suppressed by an
+    * older layer's delete keys or predicate — carrying their own stats
+    * sidecar so they stay prunable ([[pruneAddOnlyLayers]]). Otherwise
+    * the inline sidecar composes the base's stats with the new files'
+    * (it depends on the base, so each attempt writes its own); base
+    * SEGMENTS carry forward by reference. Either way `maintain` blooms
+    * gain the new files' bitmaps and every other field comes from `cur`
+    * (the table's schema, which may be wider than the batch's). */
+  private[sources] def appendTransform(add: NewFiles, cur: Manifest): Manifest = {
+    val next = bump(cur).copy(blooms = maintainBlooms(add.spark, add.root,
+      cur.schemaDdl, add.files, add.bloomMemo, cur.blooms))
+    if (cur.layers.nonEmpty)
+      next.copy(layers = cur.layers :+ MergeLayer("", add.files,
+        if (add.files.isEmpty) "" else add.sidecar))
+    else next.copy(files = cur.files ++ add.files,
+      statsFile = writeStatsFile(add.root, fileStats(add.root, cur) ++ add.stats))
+  }
+
+  /** The head before a table's first commit: empty, version -1. */
+  private[sources] def noTable(ddl: String): Manifest =
+    Manifest(-1, -1, ddl, Nil)
+
+  /** The head an append of `schema` builds on: the current manifest
+    * (whose schema must accept the batch), or [[noTable]]. */
+  private def appendBase(cur: Option[Manifest], schema: StructType): Manifest =
+    cur match {
+      case Some(m) =>
+        require(appendCompatible(m.schemaDdl, schema),
+          s"append schema mismatch: table has [${m.schemaDdl}], " +
+            s"append has [${schema.toDDL}]")
+        m
+      case None => noTable(schema.toDDL)
+    }
+
+  /** Replay dedup of the idempotent commits: does a version of `vs`
+    * above `floor` carry `txn`? Newest first with early exit — a replayed
+    * batch is by construction recent, so the common hit is the last
+    * manifest or two. Always false for the empty (no) txn, without
+    * listing. */
+  private def txnSeenAbove(root: String, txn: String, floor: Int,
+      vs: => Seq[Int]): Boolean =
+    txn.nonEmpty && vs.reverseIterator.takeWhile(_ > floor)
+      .exists(v => snapshot(root, Some(v)).get.txn == txn)
+
+  /** A REBASING table commit under writer transaction `txn` ("" = none):
+    * dedup (see [[retrying]]), then `prepare` runs ONCE — it writes what
+    * does not depend on the base and returns the derivation of the next
+    * manifest from the head — then the publish loop. None = a replay. */
+  private def commitOnce(root: String, what: String, txn: String)(
+      prepare: => Option[Manifest] => Manifest): Option[Int] = {
+    // ONE listing seeds both the initial scan and the `checked`
+    // watermark: a second listing here would let a version landing
+    // between the two slip past both the initial scan (not listed yet)
+    // and the in-loop recheck (already below `checked`).
+    val vs0 = if (txn.isEmpty) Nil else versions(root)
+    if (txnSeenAbove(root, txn, -1, vs0)) return None
+    var checked = vs0.lastOption.getOrElse(-1)
+    val next = prepare
+    retrying(s"$what under $root") {
+      val cur = snapshot(root)
+      val head = cur.fold(-1)(_.version)
+      if (head > checked && txnSeenAbove(root, txn, checked, versions(root)))
+        Some(None)
+      else {
+        checked = head
+        val m = next(cur).copy(txn = txn)
+        if (publish(root, m)) Some(Some(m.version)) else None
+      }
+    }
+  }
+
+  /** A table commit derived from the current head, which must exist:
+    * `next` returns the manifest to publish, or None when there is
+    * nothing to commit (the head version is the answer). */
+  private def commitHead(root: String, what: String)(
+      next: Manifest => Option[Manifest]): Int =
+    retrying(s"$what under $root") {
+      val cur = snapshot(root).getOrElse(
+        sys.error(s"$what on a table with no commits under $root"))
+      next(cur) match {
+        case None    => Some(cur.version)
+        case Some(m) => if (publish(root, m)) Some(m.version) else None
+      }
+    }
+
+  /** OVERWRITE commit: the new snapshot references only `df`'s files.
+    * Returns the committed version. An overwrite rebases trivially (its
+    * content does not depend on the base), so it always eventually
+    * lands; an attempt only lists the versions, never parses one. */
+  def commitOverwrite(df: DataFrame, root: String): Int = {
+    val add = newFiles(df, root)
+    retrying(s"commitOverwrite under $root") {
+      val base = versions(root).lastOption.getOrElse(-1)
+      val m = rewrite(base, df.schema.toDDL, add.files, add.sidecar)
+      if (publish(root, m)) Some(m.version) else None
+    }
   }
 
   /** CREATE-ONLY commit: publish STRICTLY at version 0 — the race-free
@@ -1832,73 +1990,20 @@ object SnapshotStore {
     def already = new IllegalArgumentException(
       s"graft: table at $root already has committed versions")
     if (versions(root).nonEmpty) throw already // cheap pre-check only
-    val files = writeData(df, root)
-    val statsFile = writeStatsFile(root,
-      harvestStats(df.sparkSession, root, files))
-    if (!publish(root, Manifest(0, -1, df.schema.toDDL, files,
-        statsFile = statsFile))) throw already
+    val add = newFiles(df, root)
+    if (!publish(root, rewrite(-1, df.schema.toDDL, add.files, add.sidecar)))
+      throw already
     0
   }
 
   /** APPEND commit: the new snapshot references the CURRENT snapshot's
-    * files plus `df`'s. On losing a version race the append REBASES —
-    * re-reads the new current file list and retries — so concurrent
-    * appends all land, each including every earlier winner's files
-    * (serializable: appends commute through the rebase). The appended
-    * schema must match the table's. */
-  def commitAppend(df: DataFrame, root: String): Int = {
-    val files = writeData(df, root)
-    val ddl = df.schema.toDDL
-    val newStats = harvestStats(df.sparkSession, root, files)
-    val newWords = newBloomMemo()
-    def maintained(blooms: Seq[BloomIndex]): Seq[BloomIndex] =
-      maintainBlooms(df.sparkSession, root, ddl, files, newWords, blooms)
-    // the add-only LAYER's stats sidecar (layered-table branch): written
-    // lazily once — layer stats depend only on the new files, never on
-    // the rebase target
-    lazy val layerStatsFile =
-      if (files.isEmpty) "" else writeStatsFile(root, newStats)
-    var attempt = 0
-    while (attempt < MaxRetries) {
-      val cur = snapshot(root)
-      cur.foreach(m => require(appendCompatible(m.schemaDdl, df.schema),
-        s"append schema mismatch: table has [${m.schemaDdl}], " +
-          s"append has [$ddl]"))
-      val base = cur.map(_.version).getOrElse(-1)
-      val tddl = cur.map(_.schemaDdl).getOrElse(ddl)
-      val baseFiles = cur.map(_.files).getOrElse(Seq.empty)
-      // On a LAYERED table (merge-on-read in flight) the append lands
-      // as an ADD-ONLY layer ABOVE the existing ones: appended rows
-      // must never be suppressed by an older layer's delete keys. The
-      // layer CARRIES the harvested stats sidecar (and maintained bloom
-      // lines), so appended rows stay prunable ([[pruneAddOnlyLayers]])
-      // exactly like an unlayered append's.
-      val published = cur match {
-        case Some(c) if c.layers.nonEmpty =>
-          publish(root, Manifest(base + 1, base, tddl, c.files,
-            statsFile = c.statsFile, segments = c.segments,
-            layers = c.layers :+ MergeLayer("", files, layerStatsFile),
-            blooms = maintained(c.blooms), cluster = c.cluster))
-        case _ =>
-          // the sidecar composes the base's INLINE stats with the new
-          // files' — it depends on the rebase target, so each attempt
-          // writes its own (orphaned attempts are unreferenced scratch;
-          // vacuum sweeps). Base SEGMENTS carry forward by reference:
-          // their stats live in their own sidecars, untouched.
-          val statsFile = writeStatsFile(root,
-            cur.map(m => fileStats(root, m)).getOrElse(Map.empty) ++
-              newStats)
-          publish(root, Manifest(base + 1, base, tddl,
-            baseFiles ++ files, statsFile = statsFile,
-            segments = cur.map(_.segments).getOrElse(Nil),
-            blooms = maintained(cur.map(_.blooms).getOrElse(Nil)),
-            cluster = cur.map(_.cluster).getOrElse(Nil)))
-      }
-      if (published) return base + 1
-      attempt += 1
-    }
-    sys.error(s"commitAppend lost $MaxRetries version races under $root")
-  }
+    * files plus `df`'s ([[appendTransform]]); a lost race rebases, so
+    * concurrent appends all land, each including every earlier winner's
+    * files (serializable: appends commute through the rebase). The
+    * appended schema must match the table's. The txn-less case of
+    * [[commitAppendOnce]]. */
+  def commitAppend(df: DataFrame, root: String): Int =
+    appendOnce(df, root, "").get
 
   /** SEGMENTED append — the O(touched-metadata) commit the manifest-
     * list tier exists for: `df`'s files land as ONE new segment (its
@@ -1907,39 +2012,24 @@ object SnapshotStore {
     * commit metadata cost is O(new files + number of segments), never
     * O(all files). The base's inline files and sidecar also carry
     * forward by reference (sidecars are immutable; two manifests may
-    * share one). Rebase-on-lost-race exactly like [[commitAppend]];
-    * the segment file is written once (its content does not depend on
-    * the base). */
+    * share one). The segment file is written once (its content does not
+    * depend on the base). */
   def appendSegment(df: DataFrame, root: String): Int = {
     val files = writeData(df, root)
-    val ddl = df.schema.toDDL
     val ref = writeSegment(root, files,
       harvestStats(df.sparkSession, root, files), df.schema)
-    var attempt = 0
-    while (attempt < MaxRetries) {
-      val cur = snapshot(root)
-      cur.foreach(m => require(appendCompatible(m.schemaDdl, df.schema),
-        s"append schema mismatch: table has [${m.schemaDdl}], " +
-          s"append has [$ddl]"))
-      val tddl = cur.map(_.schemaDdl).getOrElse(ddl)
+    retrying(s"appendSegment under $root") {
+      val cur = appendBase(snapshot(root), df.schema)
       // a segment lands at BASE level, below any merge-on-read layer —
       // its rows would be suppressed by older layers' delete keys,
       // which is never what an append means. Fold the layers first.
-      cur.foreach(m => require(m.layers.isEmpty,
-        s"appendSegment on a table with ${m.layers.size} merge-on-read " +
+      require(cur.layers.isEmpty,
+        s"appendSegment on a table with ${cur.layers.size} merge-on-read " +
           "layer(s): optimize() to fold them first (or use commitAppend, " +
-          "which lands as an add-only layer)"))
-      val base = cur.map(_.version).getOrElse(-1)
-      if (publish(root, Manifest(base + 1, base, tddl,
-          cur.map(_.files).getOrElse(Seq.empty),
-          statsFile = cur.map(_.statsFile).getOrElse(""),
-          segments = cur.map(_.segments).getOrElse(Nil) :+ ref,
-          blooms = cur.map(_.blooms).getOrElse(Nil),
-          cluster = cur.map(_.cluster).getOrElse(Nil))))
-        return base + 1
-      attempt += 1
+          "which lands as an add-only layer)")
+      val m = bump(cur).copy(segments = cur.segments :+ ref)
+      if (publish(root, m)) Some(m.version) else None
     }
-    sys.error(s"appendSegment lost $MaxRetries version races under $root")
   }
 
   /** METADATA-ONLY manifest compaction (Iceberg's rewrite-manifests
@@ -1951,15 +2041,12 @@ object SnapshotStore {
     * level pruning gets coarser-but-fewer summaries to test. Grouping
     * preserves the existing file order (ingest/z-order order is what
     * makes neighboring files' ranges adjacent, which is what makes the
-    * regrouped summaries tight). Read-modify-write concurrency like
-    * [[optimize]]: a lost race restarts from the new head; abandoned
-    * segment files are unreferenced scratch for [[vacuum]]. */
+    * regrouped summaries tight). Bloom indexes carry forward: their
+    * sidecars key on data files, which do not change. Restarts on a lost
+    * race (the grouping depends on the head's file list). */
   def rewriteManifests(root: String, targetSegments: Int): Int = {
     require(targetSegments >= 1, "targetSegments must be >= 1")
-    var attempt = 0
-    while (attempt < MaxRetries) {
-      val cur = snapshot(root).getOrElse(sys.error(
-        s"rewriteManifests of a table with no commits under $root"))
+    commitHead(root, "rewriteManifests") { cur =>
       require(cur.layers.isEmpty,
         s"rewriteManifests on a table with ${cur.layers.size} merge-on-" +
           "read layer(s): a manifest rewrite regroups BASE files only — " +
@@ -1979,98 +2066,31 @@ object SnapshotStore {
         writeSegment(root, g, stats.filter { case (f, _) => inG(f) },
           schema)
       }
-      if (publish(root, Manifest(cur.version + 1, cur.version,
-          cur.schemaDdl, Seq.empty, segments = refs,
-          cluster = cur.cluster)))
-        return cur.version + 1
-      attempt += 1
+      Some(bump(cur).copy(files = Nil, statsFile = "", segments = refs))
     }
-    sys.error(s"rewriteManifests lost $MaxRetries version races under $root")
   }
 
   /** IDEMPOTENT append — the Delta `txn` action pattern for exactly-once
     * streaming sinks: if any RETAINED manifest already carries `txn`, the
     * commit is a no-op returning None (a replayed micro-batch after a
     * sink crash); otherwise appends with the txn recorded in the new
-    * manifest. The idempotency horizon is the manifest retention horizon
-    * ([[vacuum]]'s keepVersions) — the same contract Delta documents for
-    * its txn retention: replays older than retention are not deduped.
-    * Safe against REPLAYS (sequential by construction — a streaming query
-    * never races itself), not against two live writers sharing a txn id.
+    * manifest. The dedup horizon and its contract are the commit
+    * protocol's ([[retrying]]). The streaming sink routes HERE, which is
+    * exactly the append-heaviest path maintained bloom indexes exist for.
     */
   def commitAppendOnce(df: DataFrame, root: String,
       txn: String): Option[Int] = {
     require(txn.nonEmpty, "txn id must be non-empty")
-    // Dedup scan runs NEWEST-FIRST with early exit: a replayed
-    // micro-batch is by construction recent, so the common hit is the
-    // last manifest or two — the old oldest-first full scan parsed every
-    // retained manifest per commit, O(versions) per micro-batch and
-    // quadratic over a stream's lifetime.
-    def txnSeenAbove(floor: Int): Boolean =
-      versions(root).reverseIterator.takeWhile(_ > floor)
-        .exists(v => snapshot(root, Some(v)).get.txn == txn)
-    // ONE listing seeds both the initial scan and the `checked`
-    // watermark: a second listing here would let a version landing
-    // between the two slip past both the initial scan (not listed yet)
-    // and the in-loop recheck (already below `checked`).
-    val vs0 = versions(root)
-    if (vs0.reverseIterator.exists(v =>
-        snapshot(root, Some(v)).get.txn == txn)) return None
-    var checked = vs0.lastOption.getOrElse(-1)
-    val files = writeData(df, root)
-    val ddl = df.schema.toDDL
-    val newStats = harvestStats(df.sparkSession, root, files)
-    // same bloom maintenance + layer-stats discipline as [[commitAppend]]
-    // — the streaming sink routes HERE, which is exactly the
-    // append-heaviest path maintained indexes exist for
-    val newWords = newBloomMemo()
-    def maintained(blooms: Seq[BloomIndex]): Seq[BloomIndex] =
-      maintainBlooms(df.sparkSession, root, ddl, files, newWords, blooms)
-    lazy val layerStatsFile =
-      if (files.isEmpty) "" else writeStatsFile(root, newStats)
-    var attempt = 0
-    while (attempt < MaxRetries) {
-      val cur = snapshot(root)
-      cur.foreach(m => require(appendCompatible(m.schemaDdl, df.schema),
-        s"append schema mismatch: table has [${m.schemaDdl}], " +
-          s"append has [$ddl]"))
-      val base = cur.map(_.version).getOrElse(-1)
-      val tddl = cur.map(_.schemaDdl).getOrElse(ddl)
-      // Re-check the txn against every manifest that appeared since the
-      // last look, INSIDE the retry loop: losing the version race means
-      // another writer landed — if that commit (or any interleaved one)
-      // carries this txn, the duplicate must not publish. This cannot
-      // close the check-then-publish window completely (the publish
-      // primitive is version-keyed, not txn-keyed); the documented
-      // contract remains replay-safety (sequential by construction), and
-      // this shrinks the two-live-writers window to the publish attempt
-      // itself. The orphaned data files of an abandoned duplicate are
-      // unreachable scratch that [[vacuum]] sweeps.
-      if (base > checked && txnSeenAbove(checked)) return None
-      checked = base
-      val baseFiles = cur.map(_.files).getOrElse(Seq.empty)
-      // layered table: land as an add-only layer (see commitAppend)
-      val published = cur match {
-        case Some(c) if c.layers.nonEmpty =>
-          publish(root, Manifest(base + 1, base, tddl, c.files, txn,
-            c.statsFile, segments = c.segments,
-            layers = c.layers :+ MergeLayer("", files, layerStatsFile),
-            blooms = maintained(c.blooms), cluster = c.cluster))
-        case _ =>
-          val statsFile = writeStatsFile(root,
-            cur.map(m => fileStats(root, m)).getOrElse(Map.empty) ++
-              newStats)
-          publish(root,
-            Manifest(base + 1, base, tddl, baseFiles ++ files, txn,
-              statsFile, segments = cur.map(_.segments).getOrElse(Nil),
-              blooms = maintained(cur.map(_.blooms).getOrElse(Nil)),
-              cluster = cur.map(_.cluster).getOrElse(Nil)))
-      }
-      if (published) return Some(base + 1)
-      attempt += 1
-    }
-    sys.error(s"commitAppendOnce lost $MaxRetries version races under $root")
+    appendOnce(df, root, txn)
   }
+
+  private def appendOnce(df: DataFrame, root: String,
+      txn: String): Option[Int] =
+    commitOnce(root, if (txn.isEmpty) "commitAppend" else "commitAppendOnce",
+      txn) {
+      val add = newFiles(df, root)
+      cur => appendTransform(add, appendBase(cur, df.schema))
+    }
 
   // --------------------------------------------------- schema evolution
 
@@ -2126,9 +2146,8 @@ object SnapshotStore {
     * Type changes fail loudly — evolution is add-column only. */
   def commitAppendEvolve(df: DataFrame, root: String): Int = {
     import org.apache.spark.sql.functions.{col, lit}
-    var attempt = 0
-    var written: Option[(String, Seq[String])] = None // merged DDL -> files
-    while (attempt < MaxRetries) {
+    var written: Option[(String, NewFiles)] = None // merged DDL -> files
+    retrying(s"commitAppendEvolve under $root") {
       val cur = snapshot(root)
       val merged = cur match {
         case Some(m) => mergeSchemas(StructType.fromDDL(m.schemaDdl), df.schema)
@@ -2137,46 +2156,25 @@ object SnapshotStore {
       val ddl = merged.toDDL
       // data files are written once per distinct merged schema; a lost
       // race against a same-schema winner reuses them (appends commute)
-      val files = written match {
-        case Some((d, fs)) if d == ddl => fs
+      val add = written match {
+        case Some((d, a)) if d == ddl => a
         case _ =>
           val dfNames = df.columns.toSet
-          val aligned = df.select(merged.fields.toSeq.map { f =>
+          val a = newFiles(df.select(merged.fields.toSeq.map { f =>
             if (dfNames(f.name)) col(f.name)
             else lit(null).cast(f.dataType).as(f.name)
-          }: _*)
-          val fs = writeData(aligned, root)
-          written = Some((ddl, fs)); fs
+          }: _*), root)
+          written = Some((ddl, a)); a
       }
-      val base = cur.map(_.version).getOrElse(-1)
-      val baseFiles = cur.map(_.files).getOrElse(Seq.empty)
       // evolution keeps the base files' OLD stats untouched: the added
       // column simply has no entry for them, and a missing entry never
       // justifies a skip — readWhere falls back to opening the file,
-      // where parquet's by-name resolution backfills NULLs
-      // layered table: land as an add-only layer (see commitAppend);
-      // older layer files read back through the WIDENED schema with
-      // by-name NULL backfill, same as base files
-      val published = cur match {
-        case Some(c) if c.layers.nonEmpty =>
-          publish(root, Manifest(base + 1, base, ddl, c.files,
-            statsFile = c.statsFile, segments = c.segments,
-            layers = c.layers :+ MergeLayer("", files),
-            blooms = c.blooms, cluster = c.cluster))
-        case _ =>
-          val statsFile = writeStatsFile(root,
-            cur.map(m => fileStats(root, m)).getOrElse(Map.empty) ++
-              harvestStats(df.sparkSession, root, files))
-          publish(root, Manifest(base + 1, base, ddl, baseFiles ++ files,
-            statsFile = statsFile,
-            segments = cur.map(_.segments).getOrElse(Nil),
-            blooms = cur.map(_.blooms).getOrElse(Nil),
-            cluster = cur.map(_.cluster).getOrElse(Nil)))
-      }
-      if (published) return base + 1
-      attempt += 1
+      // where parquet's by-name resolution backfills NULLs (older layer
+      // files read back through the WIDENED schema the same way)
+      val m = appendTransform(add,
+        cur.getOrElse(noTable(ddl)).copy(schemaDdl = ddl))
+      if (publish(root, m)) Some(m.version) else None
     }
-    sys.error(s"commitAppendEvolve lost $MaxRetries version races under $root")
   }
 
   // ------------------------------------------------ optimize (compaction)
@@ -2187,43 +2185,30 @@ object SnapshotStore {
     * version with BIT-IDENTICAL content — the lakehouse compaction
     * action. The old small files stay referenced by earlier manifests
     * (pinned readers are untouched) and become [[vacuum]]-eligible once
-    * those versions age out. Concurrency: compaction is read-modify-
-    * write, so on losing the version race the whole rewrite RESTARTS
-    * from the new current snapshot (never publishing a compaction of a
-    * stale base — that would silently drop the interleaved commit); the
-    * abandoned attempt's files are unreachable scratch that vacuum
-    * sweeps. Returns the committed version. */
+    * those versions age out. Read-modify-write: a lost race restarts the
+    * rewrite from the new head. Returns the committed version. */
   def optimize(spark: SparkSession, root: String, targetFiles: Int = 1,
       zorderBy: Seq[String] = Nil): Int = {
     require(targetFiles >= 1, "targetFiles must be >= 1")
-    var attempt = 0
-    while (attempt < MaxRetries) {
-      val cur = snapshot(root).getOrElse(
-        sys.error(s"optimize of a table with no commits under $root"))
+    commitHead(root, "optimize") { cur =>
       val df = read(spark, root, Some(cur.version))
       val rewritten =
         if (zorderBy.nonEmpty)
           graft.operators.Layout.zOrder(df, zorderBy,
             partitions = targetFiles).drop("zkey")
         else df.repartition(targetFiles)
-      val files = writeData(rewritten, root)
       // compaction rewrites every row into fresh files — fresh footers,
       // fresh stats; z-ordering is precisely what makes these ranges
       // DISJOINT enough for readWhere to skip most of them
-      val statsFile = writeStatsFile(root,
-        harvestStats(spark, root, files))
+      val add = newFiles(rewritten, root)
       // the clustering SPEC is recorded in the manifest (Delta/Iceberg
       // clustering-columns idea): later appends carry it forward, and
       // [[optimizeIncremental]] uses it to re-cluster only the files
       // whose key ranges overlap. A plain repartition destroys any
       // clustering, so it clears the spec.
-      if (publish(root,
-          Manifest(cur.version + 1, cur.version, cur.schemaDdl, files,
-            statsFile = statsFile, cluster = zorderBy)))
-        return cur.version + 1
-      attempt += 1
+      Some(rewrite(cur.version, cur.schemaDdl, add.files, add.sidecar,
+        cluster = zorderBy))
     }
-    sys.error(s"optimize lost $MaxRetries version races under $root")
   }
 
   /** INCREMENTAL RE-CLUSTER — the Iceberg rewrite-data-files-with-
@@ -2251,11 +2236,8 @@ object SnapshotStore {
     * out of scope like [[compactSmallFiles]]. Returns the committed
     * version, or the current version unchanged when fewer than two
     * files overlap. */
-  def optimizeIncremental(spark: SparkSession, root: String): Int = {
-    var attempt = 0
-    while (attempt < MaxRetries) {
-      val cur = snapshot(root).getOrElse(sys.error(
-        s"optimizeIncremental on a table with no commits under $root"))
+  def optimizeIncremental(spark: SparkSession, root: String): Int =
+    commitHead(root, "optimizeIncremental") { cur =>
       require(cur.cluster.nonEmpty,
         s"optimizeIncremental under $root: no clustering spec in the " +
           "manifest — run optimize(zorderBy = ...) once to establish " +
@@ -2294,27 +2276,28 @@ object SnapshotStore {
           curMax = Some(mx)
         }
       }
-      val rewrite =
+      val rewriteSet =
         (groups.filter(_.size >= 2).flatten ++ rangeless).toSeq
-      if (rewrite.size < 2) return cur.version // layout already disjoint
-      val packed = graft.operators.Layout.zOrder(
-        spark.read.schema(schema)
-          .parquet(rewrite.map(f => Paths.get(root, f).toString): _*),
-        cur.cluster, partitions = rewrite.size).drop("zkey")
-      val files = writeData(packed, root)
-      val keep = cur.files.filterNot(rewrite.toSet)
-      val statsFile = writeStatsFile(root,
-        stats.view.filterKeys(keep.toSet).toMap ++
-          harvestStats(spark, root, files))
-      if (publish(root, Manifest(cur.version + 1, cur.version,
-          cur.schemaDdl, keep ++ files, statsFile = statsFile,
-          segments = cur.segments, layers = cur.layers,
-          blooms = cur.blooms, cluster = cur.cluster)))
-        return cur.version + 1
-      attempt += 1
+      if (rewriteSet.size < 2) None // layout already disjoint
+      else Some(replaceInline(root, cur, stats, rewriteSet,
+        graft.operators.Layout.zOrder(
+          spark.read.schema(schema).parquet(
+            rewriteSet.map(f => Paths.get(root, f).toString): _*),
+          cur.cluster, partitions = rewriteSet.size).drop("zkey")))
     }
-    sys.error(
-      s"optimizeIncremental lost $MaxRetries version races under $root")
+
+  /** The next manifest after replacing the inline files `old` by
+    * `packed`'s rows (written here): surviving files keep their entries
+    * of `stats` (the head's inline sidecar), the new files get fresh
+    * footer stats, and everything else — segments, layers, blooms,
+    * cluster — carries forward. */
+  private def replaceInline(root: String, cur: Manifest,
+      stats: Map[String, Map[String, ColStats]], old: Seq[String],
+      packed: DataFrame): Manifest = {
+    val add = newFiles(packed, root)
+    val keep = cur.files.filterNot(old.toSet)
+    bump(cur).copy(files = keep ++ add.files, statsFile = writeStatsFile(
+      root, stats.view.filterKeys(keep.toSet).toMap ++ add.stats))
   }
 
   /** PARTIAL (BIN-PACK) COMPACTION — the incremental maintenance
@@ -2329,42 +2312,23 @@ object SnapshotStore {
     * [[rewriteManifests]] or fold via [[optimize]]); merge-on-read
     * layers are PRESERVED and stay correct, because layer suppression
     * is by KEY (or predicate), never by file — a base row's location
-    * is irrelevant to the fold. Stats compose: surviving files keep
-    * their sidecar entries, the packed files get fresh footer stats.
-    * Returns the committed version, or the CURRENT version unchanged
-    * when fewer than two files qualify (nothing to pack — no empty
-    * commit). Concurrency: read-modify-write like [[optimize]] — a
-    * lost race restarts selection AND rewrite from the new head
-    * (abandoned files are vacuum scratch). */
+    * is irrelevant to the fold. Returns the committed version, or the
+    * CURRENT version unchanged when fewer than two files qualify
+    * (nothing to pack — no empty commit). Read-modify-write: a lost
+    * race restarts selection AND rewrite from the new head. */
   def compactSmallFiles(spark: SparkSession, root: String,
       maxBytes: Long, targetFiles: Int = 1): Int = {
     require(maxBytes > 0, "maxBytes must be positive")
     require(targetFiles >= 1, "targetFiles must be >= 1")
-    var attempt = 0
-    while (attempt < MaxRetries) {
-      val cur = snapshot(root).getOrElse(sys.error(
-        s"compactSmallFiles on a table with no commits under $root"))
-      val schema = StructType.fromDDL(cur.schemaDdl)
+    commitHead(root, "compactSmallFiles") { cur =>
       val small = cur.files.filter(f =>
         Files.size(Paths.get(root, f)) <= maxBytes)
-      if (small.size < 2) return cur.version
-      val packed = spark.read.schema(schema)
-        .parquet(small.map(f => Paths.get(root, f).toString): _*)
-        .repartition(targetFiles)
-      val files = writeData(packed, root)
-      val keep = cur.files.filterNot(small.toSet)
-      val statsFile = writeStatsFile(root,
-        fileStats(root, cur).view.filterKeys(keep.toSet).toMap ++
-          harvestStats(spark, root, files))
-      if (publish(root, Manifest(cur.version + 1, cur.version,
-          cur.schemaDdl, keep ++ files, statsFile = statsFile,
-          segments = cur.segments, layers = cur.layers,
-          blooms = cur.blooms, cluster = cur.cluster)))
-        return cur.version + 1
-      attempt += 1
+      if (small.size < 2) None
+      else Some(replaceInline(root, cur, fileStats(root, cur), small,
+        spark.read.schema(StructType.fromDDL(cur.schemaDdl))
+          .parquet(small.map(f => Paths.get(root, f).toString): _*)
+          .repartition(targetFiles)))
     }
-    sys.error(
-      s"compactSmallFiles lost $MaxRetries version races under $root")
   }
 
   // --------------------------------------------------------------- merge
@@ -2378,11 +2342,8 @@ object SnapshotStore {
     * unmatched upserts insert), and the write side is an overwrite
     * commit — new immutable files, fresh footer stats, pinned readers
     * untouched, replaced files vacuum-eligible once their versions age
-    * out. Concurrency is [[optimize]]'s read-modify-write rule: losing
-    * the version race RESTARTS the fold from the new current snapshot
-    * (publishing a merge of a stale base would silently drop the
-    * interleaved commit); abandoned attempts' files are unreachable
-    * scratch that [[vacuum]] sweeps.
+    * out. Read-modify-write like [[optimize]]: a lost race restarts the
+    * fold from the new head.
     *
     * Cost shape: O(base + changes) per merge — the copy-on-write
     * trade every snapshot store makes without row-level delete files;
@@ -2392,42 +2353,14 @@ object SnapshotStore {
     */
   def merge(spark: SparkSession, root: String, changes: DataFrame,
       key: String, versionCol: String, deleteCol: String,
-      skipPartialAgg: Boolean = false): Int = {
-    var attempt = 0
-    while (attempt < MaxRetries) {
-      val cur = snapshot(root).getOrElse(
-        sys.error(s"merge into a table with no commits under $root"))
+      skipPartialAgg: Boolean = false): Int =
+    commitHead(root, "merge") { cur =>
       val base = read(spark, root, Some(cur.version))
-      val merged = graft.operators.Temporal.applyChangelog(
-        base, changes, key, versionCol, deleteCol, skipPartialAgg)
-      val files = writeData(merged, root)
-      val statsFile = writeStatsFile(root,
-        harvestStats(spark, root, files))
-      if (publish(root, Manifest(cur.version + 1, cur.version,
-          base.schema.toDDL, files, statsFile = statsFile)))
-        return cur.version + 1
-      attempt += 1
+      val add = newFiles(graft.operators.Temporal.applyChangelog(
+        base, changes, key, versionCol, deleteCol, skipPartialAgg), root)
+      Some(rewrite(cur.version, base.schema.toDDL, add.files, add.sidecar))
     }
-    sys.error(s"merge lost $MaxRetries version races under $root")
-  }
 
-  /** MERGE-ON-READ — the O(changes) merge: fold the changelog to its
-    * per-key winners (the exact [[graft.operators.Temporal
-    * .applyChangelog]] max_by shape, minus the base join — THE BASE IS
-    * NEVER READ) and commit them as one [[MergeLayer]]; reads apply the
-    * layer as an anti-join + union ([[applyLayers]]), yielding content
-    * BIT-IDENTICAL to what the copy-on-write [[merge]] would have
-    * rewritten (spec + q125 gate pin the hash equality). Wall and I/O
-    * scale with |changes| alone — the deletion-vector/equality-delete
-    * trade every table format ships for base ≫ daily-changes — at the
-    * price of one small anti-join per accreted layer on every read;
-    * [[optimize]] (or a CoW [[merge]]) folds the layers back into
-    * plain base files. Concurrency: the layer content depends only on
-    * `changes`, so it is written ONCE and the publish rebases across
-    * losing races like an append (concurrent mergeOnReads serialize
-    * into layer order = version order — the same result as running
-    * them sequentially). Changelog contract as [[merge]]: non-null
-    * keys, `(key, version)` unique, null tombstone flag = insert. */
   /** The changelog fold shared by [[mergeOnRead]] and
     * [[mergeOnReadOnce]]: per-key winners (latest version's payload +
     * tombstone flag) in table-column order — exactly the
@@ -2450,81 +2383,63 @@ object SnapshotStore {
         col(s"graft_w.$LayerDelCol").as(LayerDelCol): _*)
   }
 
+  /** MERGE-ON-READ — the O(changes) merge: fold the changelog to its
+    * per-key winners (the exact [[graft.operators.Temporal
+    * .applyChangelog]] max_by shape, minus the base join — THE BASE IS
+    * NEVER READ) and commit them as one [[MergeLayer]]; reads apply the
+    * layer as an anti-join + union ([[applyLayers]]), yielding content
+    * BIT-IDENTICAL to what the copy-on-write [[merge]] would have
+    * rewritten (spec + q125 gate pin the hash equality). Wall and I/O
+    * scale with |changes| alone — the deletion-vector/equality-delete
+    * trade every table format ships for base ≫ daily-changes — at the
+    * price of one small anti-join per accreted layer on every read;
+    * [[optimize]] (or a CoW [[merge]]) folds the layers back into
+    * plain base files. The layer content depends only on `changes`, so
+    * it is written ONCE and the publish rebases (concurrent mergeOnReads
+    * serialize into layer order = version order — the same result as
+    * running them sequentially). Changelog contract as [[merge]]:
+    * non-null keys, `(key, version)` unique, null tombstone flag =
+    * insert. The txn-less case of [[mergeOnReadOnce]]. */
   def mergeOnRead(spark: SparkSession, root: String, changes: DataFrame,
       key: String, versionCol: String, deleteCol: String,
-      skipPartialAgg: Boolean = false): Int = {
-    val cur0 = snapshot(root).getOrElse(
-      sys.error(s"mergeOnRead into a table with no commits under $root"))
-    val schema = StructType.fromDDL(cur0.schemaDdl)
-    val winners = foldChangeWinners(changes, schema, key, versionCol,
-      deleteCol, skipPartialAgg)
-    val files = writeData(winners, root)
-    val layer = MergeLayer(key, files)
-    var attempt = 0
-    while (attempt < MaxRetries) {
-      val cur = snapshot(root).get
-      require(cur.schemaDdl == cur0.schemaDdl,
-        s"schema evolved during mergeOnRead: winners were built for " +
-          s"[${cur0.schemaDdl}], table now has [${cur.schemaDdl}]")
-      if (publish(root, Manifest(cur.version + 1, cur.version,
-          cur.schemaDdl, cur.files, statsFile = cur.statsFile,
-          segments = cur.segments, layers = cur.layers :+ layer,
-          blooms = cur.blooms, cluster = cur.cluster)))
-        return cur.version + 1
-      attempt += 1
-    }
-    sys.error(s"mergeOnRead lost $MaxRetries version races under $root")
-  }
+      skipPartialAgg: Boolean = false): Int =
+    layerOnce(root, changes, key, versionCol, deleteCol, "",
+      skipPartialAgg).get
 
   /** [[mergeOnRead]] with [[commitAppendOnce]]'s replay idempotence —
     * the streaming-CDC-upsert primitive: a micro-batch replayed after a
     * sink crash (txn already in a retained manifest) returns None and
     * commits NOTHING, so the layer chain stays exactly one layer per
-    * logical batch. Same dedup protocol as the append twin (one listing
-    * seeds scan + watermark, newest-first early-exit scan, in-loop
-    * recheck across lost races) and the same contract: replay-safe by
-    * construction, retention-horizon-bounded, not a guard against two
-    * live writers sharing a txn id. The winners fold and layer files are
-    * built ONCE before the retry loop — a lost race re-publishes the
-    * same immutable layer against the new head, which is correct
-    * because a layer's content depends only on `changes`. */
+    * logical batch. Same dedup protocol and contract as the append twin
+    * ([[retrying]]). */
   def mergeOnReadOnce(spark: SparkSession, root: String,
       changes: DataFrame, key: String, versionCol: String,
       deleteCol: String, txn: String,
       skipPartialAgg: Boolean = false): Option[Int] = {
     require(txn.nonEmpty, "txn id must be non-empty")
-    def txnSeenAbove(floor: Int): Boolean =
-      versions(root).reverseIterator.takeWhile(_ > floor)
-        .exists(v => snapshot(root, Some(v)).get.txn == txn)
-    val vs0 = versions(root)
-    require(vs0.nonEmpty,
-      s"mergeOnReadOnce into a table with no commits under $root")
-    if (vs0.reverseIterator.exists(v =>
-        snapshot(root, Some(v)).get.txn == txn)) return None
-    var checked = vs0.last
-    val cur0 = snapshot(root).get
-    val schema = StructType.fromDDL(cur0.schemaDdl)
-    val winners = foldChangeWinners(changes, schema, key, versionCol,
-      deleteCol, skipPartialAgg)
-    val files = writeData(winners, root)
-    val layer = MergeLayer(key, files)
-    var attempt = 0
-    while (attempt < MaxRetries) {
-      val cur = snapshot(root).get
-      require(cur.schemaDdl == cur0.schemaDdl,
-        s"schema evolved during mergeOnReadOnce: winners were built " +
-          s"for [${cur0.schemaDdl}], table now has [${cur.schemaDdl}]")
-      if (cur.version > checked && txnSeenAbove(checked)) return None
-      checked = cur.version
-      if (publish(root, Manifest(cur.version + 1, cur.version,
-          cur.schemaDdl, cur.files, txn, cur.statsFile,
-          segments = cur.segments, layers = cur.layers :+ layer,
-          blooms = cur.blooms, cluster = cur.cluster)))
-        return Some(cur.version + 1)
-      attempt += 1
+    layerOnce(root, changes, key, versionCol, deleteCol, txn,
+      skipPartialAgg)
+  }
+
+  private def layerOnce(root: String, changes: DataFrame, key: String,
+      versionCol: String, deleteCol: String, txn: String,
+      skipPartialAgg: Boolean): Option[Int] = {
+    val what = if (txn.isEmpty) "mergeOnRead" else "mergeOnReadOnce"
+    commitOnce(root, what, txn) {
+      val head0 = snapshot(root)
+      require(head0.nonEmpty, s"$what into a table with no commits under $root")
+      val cur0 = head0.get
+      val layer = MergeLayer(key, writeData(foldChangeWinners(changes,
+        StructType.fromDDL(cur0.schemaDdl), key, versionCol, deleteCol,
+        skipPartialAgg), root))
+      curOpt => {
+        val cur = curOpt.get
+        require(cur.schemaDdl == cur0.schemaDdl,
+          s"schema evolved during $what: winners were built for " +
+            s"[${cur0.schemaDdl}], table now has [${cur.schemaDdl}]")
+        bump(cur).copy(layers = cur.layers :+ layer)
+      }
     }
-    sys.error(
-      s"mergeOnReadOnce lost $MaxRetries version races under $root")
   }
 
   /** PREDICATE-LEVEL DELETE as a MERGE-ON-READ layer — the
@@ -2552,21 +2467,12 @@ object SnapshotStore {
     * dropped base files age out with their versions). Cost at 100 TB:
     * the commit is O(inline-file stats walk) metadata; the read tax is
     * one codegen'd filter — cheaper than any keyed layer. Unknown
-    * predicate columns fail loudly. Concurrency: rebase-and-retry;
-    * the drop set recomputes against each new head. Returns the
-    * committed version. */
+    * predicate columns fail loudly. A lost race rebases: the drop set
+    * recomputes against the new head. Returns the committed version. */
   def deleteWhere(spark: SparkSession, root: String,
-      pred: StatsPred): Int = {
-    var attempt = 0
-    while (attempt < MaxRetries) {
-      val cur = snapshot(root).getOrElse(
-        sys.error(s"deleteWhere on a table with no commits under $root"))
-      if (publish(root, deleteTransform(root, cur, pred)))
-        return cur.version + 1
-      attempt += 1
-    }
-    sys.error(s"deleteWhere lost $MaxRetries version races under $root")
-  }
+      pred: StatsPred): Int =
+    commitHead(root, "deleteWhere")(cur =>
+      Some(deleteTransform(root, cur, pred)))
 
   /** The manifest TRANSFORM behind [[deleteWhere]], shared with
     * [[Catalog.deleteWhere]] (same semantics, catalog-published):
@@ -2595,11 +2501,7 @@ object SnapshotStore {
     val stats = fileStats(tableRoot, m)
     val keep = m.files.filterNot(f =>
       stats.get(f).exists(s => mustMatch(s, schema, pred)))
-    // txn reset: a writer-transaction id marks exactly ONE commit's
-    // replay identity — carrying it into the delete's version would
-    // make a replayed streaming batch think it already landed here
-    m.copy(version = m.version + 1, base = m.version, files = keep,
-      txn = "",
+    bump(m).copy(files = keep,
       layers = m.layers :+ MergeLayer("", Nil, "", rendered))
   }
 

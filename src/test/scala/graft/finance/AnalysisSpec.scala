@@ -58,6 +58,19 @@ class AnalysisSpec extends SparkSpec {
     assert(math.abs(out - (140.12 + 1138.40)) < 1e-9)
   }
 
+  test("loan interest: a loan purpose without a Zinsen amount is skipped") {
+    // pandas str.extract yields NaN for the split-less purpose and the
+    // sum skips it; the empty match must not reach the ANSI double cast
+    val splitless = base.unionByName(pc(("common", "2024-07-01", "Bank",
+      "Rechnung Darl.-Leistung 607 Sondertilgung", null, -5000.0,
+      "wohnen::rate")))
+    val out = Analysis.loanInterest(splitless, 2024).as[Double].head()
+    assert(math.abs(out - (140.12 + 1138.40)) < 1e-9)
+    val none = pc(("common", "2024-07-01", "Bank",
+      "Darl.-Leistung ohne Aufteilung", null, -5000.0, "wohnen::rate"))
+    assert(Analysis.loanInterest(none, 2024).as[Double].head() === 0.0)
+  }
+
   test("uncategorized cumsum: running sum over amount-ascending order") {
     val multi = pc(
       ("giro", "2024-04-04", "A", null, null, -30.0, null),

@@ -1325,4 +1325,78 @@ class SnapshotStoreSpec extends SparkSpec {
       } finally s.close()
     }
   }
+
+  test("rewriteManifests carries the bloom index: equality probes keep " +
+      "their bloom pruning after the regrouping") {
+    val root = freshRoot()
+    // clustered on `grp`, probed on `id`: only the bloom tier can skip
+    (0 until 4).foreach { g =>
+      SnapshotStore.commitAppend(
+        spark.range(0, 400).filter(col("id") % 4 === g)
+          .select(col("id"), lit(g).as("grp")).coalesce(1), root)
+    }
+    SnapshotStore.indexBloom(spark, root, "id", logBits = 12)
+    val probe = SnapshotStore.StatsPred.Eq("id", 42L)
+    val (_, before) = SnapshotStore.readWhere(spark, root, probe)
+    assert(before.bloomSkipped === 3, before.toString)
+    SnapshotStore.rewriteManifests(root, 2)
+    val m = SnapshotStore.snapshot(root).get
+    assert(m.files.isEmpty && m.segments.size === 2)
+    assert(m.blooms.map(_.column) === Seq("id"))
+    val (df, after) = SnapshotStore.readWhere(spark, root, probe)
+    assert(df.as[(Long, Int)].collect().toSeq === Seq((42L, 2)))
+    assert(after.bloomSkipped === before.bloomSkipped &&
+      after.filesOpened === before.filesOpened, after.toString)
+  }
+
+  test("evolve-append on a layered table lands as a pruned add-only " +
+      "layer with its stats and maintained bloom lines") {
+    val root = freshRoot()
+    SnapshotStore.commitOverwrite(
+      spark.range(0, 1000).select(col("id"), (col("id") % 7).as("v"))
+        .repartitionByRange(4, col("id")), root)              // v0
+    SnapshotStore.indexBloom(spark, root, "id", maintain = true)
+    SnapshotStore.deleteWhere(spark, root,
+      SnapshotStore.StatsPred.Between("id", 100L, 199L))      // layered
+    SnapshotStore.commitAppendEvolve(
+      spark.range(1000, 2000).select(col("id"), (col("id") % 7).as("v"),
+        lit("new").as("w")).repartitionByRange(4, col("id")), root)
+    val m = SnapshotStore.snapshot(root).get
+    val layer = m.layers.last
+    assert(layer.key.isEmpty && layer.pred.isEmpty && layer.files.size === 4)
+    assert(layer.statsFile.nonEmpty,
+      "the evolve layer must carry its stats sidecar")
+    assert(m.blooms.map(_.column) === Seq("id") &&
+      layer.files.toSet.subsetOf(
+        SnapshotStore.bloomBitmaps(root, m.blooms.head).keySet),
+      "the maintained bloom must cover the evolve layer's files")
+    val (dfL, repL) = SnapshotStore.readWhere(spark, root,
+      SnapshotStore.StatsPred.Between("id", 1300L, 1350L))
+    assert(dfL.filter(col("w") === "new").count() === 51)
+    assert(repL.filesOpened < repL.filesListed, repL.toString)
+    val (dfE, repE) = SnapshotStore.readWhere(spark, root,
+      SnapshotStore.StatsPred.Eq("id", 1500L))
+    assert(dfE.count() === 1 && repE.filesOpened <= 1, repE.toString)
+    // the older delete still applies; base rows read w as NULL
+    assert(SnapshotStore.read(spark, root).filter(col("w").isNull)
+      .count() === 900)
+  }
+
+  test("optimize z-orders on a DATE column and the layout prunes a " +
+      "date-range readWhere") {
+    val root = freshRoot()
+    val days = spark.range(0, 800).select(
+      expr("date_add(DATE'2020-01-01', CAST((id * 37) % 400 AS INT))")
+        .as("d"), col("id"))
+    SnapshotStore.commitOverwrite(days.repartition(4), root)
+    SnapshotStore.optimize(spark, root, targetFiles = 4, zorderBy = Seq("d"))
+    val m = SnapshotStore.snapshot(root).get
+    assert(m.cluster === Seq("d") && m.files.size === 4)
+    val lo = java.sql.Date.valueOf("2020-02-01")
+    val hi = java.sql.Date.valueOf("2020-02-20")
+    val (df, rep) = SnapshotStore.readWhere(spark, root,
+      SnapshotStore.StatsPred.Between("d", lo, hi))
+    assert(df.count() === days.filter(col("d").between(lo, hi)).count())
+    assert(rep.filesOpened < rep.filesListed, rep.toString)
+  }
 }
